@@ -88,9 +88,11 @@ class Catalog:
     """Directory-backed catalog: one subdir per managed table."""
 
     def __init__(self, base_dir: str | None = None):
-        self.base_dir = base_dir or os.path.join(
+        # absolute: table LOCATIONs handed to Spark would otherwise
+        # resolve under the warehouse dir, not the process's cwd
+        self.base_dir = os.path.abspath(base_dir or os.path.join(
             tempfile.gettempdir(), "snappydata_spark_store"
-        )
+        ))
         os.makedirs(self.base_dir, exist_ok=True)
 
     def table_path(self, name: str) -> str:

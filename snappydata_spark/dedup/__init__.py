@@ -16,19 +16,7 @@ from __future__ import annotations
 
 from pyspark.sql import DataFrame, functions as F
 
-from snappydata_spark.functions import text as T
 from snappydata_spark.functions import vector as V
-
-
-def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id") -> DataFrame:
-    """Exact dedup on the full-content fingerprint: keep the min-id doc
-    per fingerprint (hash-groupBy — one shuffle on the md5 key)."""
-    fp = T.fingerprint(F.col(text_col)).alias("fp")
-    return (
-        df.select(F.col(id_col), fp)
-        .groupBy("fp")
-        .agg(F.min(id_col).alias(id_col), F.count(F.lit(1)).alias("n_copies"))
-    )
 
 
 def _sig_frame(banded: DataFrame, id_col: str = "doc_id") -> DataFrame:

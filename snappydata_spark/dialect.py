@@ -1,12 +1,13 @@
-"""SQL dialect pre-parser for the reference's extensions over Spark SQL.
+"""SQL dialect pre-parser: the one place a statement's kind is decided.
 
-The reference extends the grammar with PUT INTO (SnappyParser.scala:
-1173-1176, putValuesOperation :1220-1247), UPDATE (:1177-1197), DELETE
-(:1198-1206) and TRUNCATE TABLE (SnappyDDLParser.scala:627).  Spark 3 SQL
-already parses UPDATE/DELETE but only executes them on v2 tables, so we
-intercept all four statement heads with a light regex pre-parser and route
-them to the mutation layer; every other statement passes through untouched
-to spark.sql (the dialect is a superset, like the reference).
+The reference classifies every statement once, in the `start` rule of
+its parser (SnappyParser.scala:1351-1386), before any strategy runs.
+`split_statement` does the same here: an anchored regex per statement
+head of the dialect beyond Spark SQL (PUT INTO, UPDATE, DELETE, MERGE,
+TRUNCATE, the DDL extensions, transaction control, SYS procedures, ...)
+yields a `Statement` with its kind and parsed fields; anything else is
+`passthrough` and goes to spark.sql (the dialect is a superset, like
+the reference).  `statements.HANDLERS` maps every kind to its handler.
 """
 
 from __future__ import annotations
@@ -17,9 +18,7 @@ from dataclasses import dataclass, field
 
 @dataclass
 class Statement:
-    kind: str  # put | update | delete | truncate | insert_select |
-    #            create_table | create_sample | create_index | drop_index |
-    #            drop_table | passthrough
+    kind: str  # a key of statements.HANDLERS
     table: str = ""
     where: str | None = None
     assignments: dict = field(default_factory=dict)
@@ -390,6 +389,50 @@ _DEPLOY = re.compile(
 )
 _UNDEPLOY = re.compile(r"^\s*UNDEPLOY\s+(\w+)\s*;?\s*$", re.I)
 _LIST_PACKAGES = re.compile(r"^\s*LIST\s+(?:PACKAGES|JARS)\s*;?\s*$", re.I)
+
+# explicit transaction control; semantics live in the session's
+# begin_transaction / commit / rollback / set_autocommit
+_TRANSACTION = re.compile(
+    r"\s*(BEGIN(?:\s+TRANSACTION)?|START\s+TRANSACTION|COMMIT|ROLLBACK)"
+    r"\s*;?\s*$",
+    re.I,
+)
+# ij / SQL-client statement shape (allow-explicit-commit.md's target
+# scenario)
+_AUTOCOMMIT = re.compile(r"\s*AUTOCOMMIT\s+(ON|OFF)\s*;?\s*$", re.I)
+# SET ISOLATION <level> (reference set-isolation SQL): the default for
+# the next BEGIN; RESET/NONE = autocommit
+_SET_ISOLATION = re.compile(
+    r"\s*SET\s+ISOLATION\s+(?:TO\s+)?([A-Za-z_ ]+?)\s*;?\s*$", re.I
+)
+# SQL faces of table_history() / vacuum() / compact_table()
+_TABLE_MAINTENANCE = re.compile(
+    r"\s*(DESCRIBE\s+HISTORY|VACUUM|COMPACT\s+TABLE)\s+([A-Za-z_][\w.]*)"
+    r"\s*;?\s*$",
+    re.I,
+)
+_MAINTENANCE_KINDS = {
+    "describe": "describe_history", "vacuum": "vacuum", "compact": "compact_table",
+}
+
+# kinds the reference rejects inside an explicit transaction (DDL with
+# autocommit off); MERGE/OVERWRITE would bypass the transaction buffer
+TX_REFUSED_KINDS = frozenset({
+    "create_table", "drop_table", "create_table_like", "truncate",
+    "alter_add", "alter_drop", "create_index", "drop_index", "create_view",
+    "drop_view", "alter_view", "create_sample", "create_topk",
+    "insert_overwrite", "merge", "create_external", "create_stream",
+    "drop_stream",
+})
+# kinds whose WHERE / SET expressions may qualify columns by the
+# target's alias or its (schema-qualified) name
+ALIASED_KINDS = frozenset({"update", "delete"})
+# DML through a synonym targets the resolved object (create-synonym.md:
+# usable in INSERT/UPDATE/DELETE)
+SYNONYM_DML_KINDS = frozenset({
+    "put", "update", "delete", "truncate", "insert_select",
+    "insert_overwrite", "merge",
+})
 
 # SELECT ... WITH ERROR [<fraction>] (SDE approximate queries,
 # docs/sde/running_queries.md:4-31): route the aggregate to a sample
@@ -1122,6 +1165,21 @@ def split_statement(text: str) -> Statement:
     # reach any of them (fuzzed in test_dialect_property.py).
     if _QUERY_HEAD.match(text):
         return Statement("passthrough")
+    m = _TRANSACTION.match(text)
+    if m:
+        op = m.group(1).split()[0].lower()
+        return Statement(
+            "transaction", options={"op": "begin" if op == "start" else op}
+        )
+    m = _AUTOCOMMIT.match(text)
+    if m:
+        return Statement("autocommit", options={"on": m.group(1).upper() == "ON"})
+    m = _SET_ISOLATION.match(text)
+    if m:
+        return Statement(
+            "set_isolation",
+            options={"level": m.group(1).strip().lower().replace(" ", "_")},
+        )
     m = _MERGE.match(text)
     if m:
         return _parse_merge(m)
@@ -1215,15 +1273,19 @@ def split_statement(text: str) -> Statement:
             options={"name": m.group(2)},
             if_not_exists=bool(m.group(1)),
         )
+    # the synonym's own name is not a relation target, so it travels in
+    # options rather than `table` (which the session resolves through
+    # existing synonyms)
     m = _CREATE_SYNONYM.match(text)
     if m:
         return Statement(
-            "create_synonym", table=m.group(1), source_sql=m.group(2)
+            "create_synonym",
+            options={"name": m.group(1), "target": m.group(2)},
         )
     m = _DROP_SYNONYM.match(text)
     if m:
         return Statement(
-            "drop_synonym", table=m.group(1),
+            "drop_synonym", options={"name": m.group(1)},
             if_not_exists=bool(re.search(r"IF\s+EXISTS", text, re.I)),
         )
     m = _CREATE_TABLE.match(text)
@@ -1448,4 +1510,8 @@ def split_statement(text: str) -> Statement:
     m = _INSERT_OVERWRITE.match(text)
     if m:
         return Statement("insert_overwrite", table=m.group(1), source_sql=m.group(2))
+    m = _TABLE_MAINTENANCE.match(text)
+    if m:
+        kind = _MAINTENANCE_KINDS[m.group(1).split()[0].lower()]
+        return Statement(kind, table=m.group(2))
     return Statement("passthrough")

@@ -25,15 +25,17 @@ from pyspark.sql.types import StructType
 from snappydata_spark.catalog import Catalog, TableMeta, canon_name
 from snappydata_spark import mutate
 from snappydata_spark.plans.cache import PlanCache
+from snappydata_spark import system
 from snappydata_spark.dialect import (
-    parse_with_error,
-    rewrite_builtins,
+    ALIASED_KINDS,
+    SYNONYM_DML_KINDS,
+    TX_REFUSED_KINDS,
     rewrite_qualified_names,
-    rewrite_stream_windows,
     split_statement,
     replace_alias_qualifier,
     sub_outside_quotes,
 )
+from snappydata_spark.statements import HANDLERS
 
 
 try:
@@ -1502,7 +1504,7 @@ class SnappySession:
                 options["foreign_keys"] = _json.dumps(fks)
         meta = TableMeta.from_options(name, provider, options)
         ds = str(meta.options.get("diskstore", "")).lower()
-        if ds and ds not in self._all_diskstores():
+        if ds and ds not in system.all_diskstores(self):
             # the reference rejects a table targeting an uncreated store
             # (create-table.md DISKSTORE option / StoreUtils vocabulary)
             raise ValueError(
@@ -1784,48 +1786,6 @@ class SnappySession:
         if opts:
             stmt += f" OPTIONS ({', '.join(opts)})"
         return self.spark.createDataFrame([(stmt,)], "createtab_stmt string")
-
-    def _member_id(self) -> str:
-        """This process's member id (host:port of the first executor —
-        the 'loner' in local mode), the MEMBERID SYSDISKSTOREIDS uses."""
-        infos = (
-            self.spark.sparkContext._jsc.sc()
-            .statusTracker()
-            .getExecutorInfos()
-        )
-        if infos:
-            return f"{infos[0].host()}:{infos[0].port()}"
-        return "localhost:0"
-
-    def _show_members(self) -> DataFrame:
-        """SHOW MEMBERS (SnappyParser.show:1264-1270, rewritten there to
-        `SELECT ID, HOST, KIND, STATUS, NETSERVERS, SERVERGROUPS FROM
-        SYS.MEMBERS`): the Spark-cluster analogue reports the driver plus
-        live executors from the status tracker.  local[n] is a single
-        member — GemFire's "loner" — while on a real cluster the driver
-        maps to the lead and executors to datastores."""
-        sc = self.spark.sparkContext
-        master = sc.master or ""
-        is_local = master.startswith("local")
-        rows = []
-        for i, info in enumerate(sc._jsc.sc().statusTracker().getExecutorInfos()):
-            host, port = info.host(), info.port()
-            kind = "loner" if is_local else ("lead" if i == 0 else "datastore")
-            rows.append(
-                (
-                    f"{host}:{port}",
-                    host,
-                    kind,
-                    "running",
-                    master if kind in ("loner", "lead") else "",
-                    "",
-                )
-            )
-        return self.spark.createDataFrame(
-            rows,
-            "id string, host string, kind string, status string, "
-            "netservers string, servergroups string",
-        )
 
     def analyze_table(self, name: str) -> dict:
         """ANALYZE TABLE ... COMPUTE STATISTICS (SnappyDDLParser.analyze:
@@ -2878,55 +2838,8 @@ class SnappySession:
                 text,
                 flags=re.I,
             )
-        # queryable system tables (reference/system_tables/): SYS.MEMBERS
-        # and SYS.SYSTABLES resolve to session-computed frames
-        if "sys." in low and re.search(
-            r"\bSYS\.(MEMBERS|SYSTABLES|TABLESTATS|SYSDISKSTORES"
-            r"|(?:SYS)?DISKSTOREIDS|SYSPOLICIES)\b",
-            text,
-            re.I,
-        ):
-            if re.search(r"\bSYS\.MEMBERS\b", text, re.I):
-                self._show_members().createOrReplaceTempView("sys_members")
-            if re.search(r"\bSYS\.SYSTABLES\b", text, re.I):
-                self._systables().createOrReplaceTempView("sys_systables")
-            if re.search(r"\bSYS\.TABLESTATS\b", text, re.I):
-                self._systablestats().createOrReplaceTempView(
-                    "sys_tablestats"
-                )
-            if re.search(r"\bSYS\.SYSDISKSTORES\b", text, re.I):
-                self._sysdiskstores().createOrReplaceTempView(
-                    "sys_sysdiskstores"
-                )
-            if re.search(r"\bSYS\.(?:SYS)?DISKSTOREIDS\b", text, re.I):
-                # sysdiskstoreids.md's own example queries
-                # `sys.diskstoreids` — both spellings resolve
-                self._sysdiskstoreids().createOrReplaceTempView(
-                    "sys_sysdiskstoreids"
-                )
-            text = re.sub(r"\bSYS\.MEMBERS\b", "sys_members", text, flags=re.I)
-            text = re.sub(
-                r"\bSYS\.SYSTABLES\b", "sys_systables", text, flags=re.I
-            )
-            text = re.sub(
-                r"\bSYS\.TABLESTATS\b", "sys_tablestats", text, flags=re.I
-            )
-            text = re.sub(
-                r"\bSYS\.SYSDISKSTORES\b", "sys_sysdiskstores", text,
-                flags=re.I,
-            )
-            text = re.sub(
-                r"\bSYS\.(?:SYS)?DISKSTOREIDS\b", "sys_sysdiskstoreids",
-                text, flags=re.I,
-            )
-            if re.search(r"\bSYS\.SYSPOLICIES\b", text, re.I):
-                self._syspolicies().createOrReplaceTempView(
-                    "sys_syspolicies"
-                )
-                text = re.sub(
-                    r"\bSYS\.SYSPOLICIES\b", "sys_syspolicies", text,
-                    flags=re.I,
-                )
+        if "sys." in low:
+            text = system.resolve_sys_tables(self, text)
         if "." in text:
             # schema-qualified relation references (APP.t / other.t) over
             # MANAGED tables/streams canonicalize in the statement text;
@@ -2962,98 +2875,15 @@ class SnappySession:
                 text,
                 flags=re.I,
             )
-        m = re.match(
-            r"\s*(BEGIN(?:\s+TRANSACTION)?|START\s+TRANSACTION|COMMIT|ROLLBACK)"
-            r"\s*;?\s*$",
-            text,
-            flags=re.I,
-        )
-        if m:
-            head = m.group(1).upper().split()[0]
-            if head in ("BEGIN", "START"):
-                self.begin_transaction()
-            elif head == "COMMIT":
-                self.commit()
-            else:
-                self.rollback()
-            return None
-        m = re.match(r"\s*AUTOCOMMIT\s+(ON|OFF)\s*;?\s*$", text, flags=re.I)
-        if m:
-            # ij / SQL-client statement shape (allow-explicit-commit.md's
-            # target scenario); semantics live in set_autocommit()
-            self.set_autocommit(m.group(1).upper() == "ON")
-            return None
-        m = re.match(
-            r"\s*SET\s+ISOLATION\s+(?:TO\s+)?([A-Za-z_ ]+?)\s*;?\s*$",
-            text,
-            flags=re.I,
-        )
-        if m:
-            # SET ISOLATION <level> (reference set-isolation SQL): stored
-            # as the default for the next BEGIN; RESET/NONE = autocommit
-            level = m.group(1).strip().lower().replace(" ", "_")
-            self._isolation = "none" if level in ("reset", "none") else level
-            return None
-        if (
-            self._tx is not None
-            and self._tx["ops"]
-            and re.match(r"\s*\(*\s*(SELECT|WITH|VALUES|TABLE)\b", text, re.I)
-        ):
-            # SELECT inside an open transaction: touched tables resolve
-            # to this session's overlay views (read-your-writes without
-            # leaking uncommitted state into the shared temp views).
-            # DML heads are excluded — their FROM clauses are mutation
-            # targets, not reads
-            touched = set(self._tx["ops"])
-
-            def _tx_sub(tm: re.Match) -> str:
-                cn = self._canon(tm.group(2))
-                if cn in touched:
-                    return f"{tm.group(1)} {self._tx_view_name(cn)}"
-                return tm.group(0)
-
-            text = sub_outside_quotes(
-                r"\b(FROM|JOIN)\s+([A-Za-z_][\w.]*)\b", _tx_sub, text, flags=re.I
-            )
         stmt = split_statement(text)
-        if (
-            self._tx is not None
-            and stmt.kind
-            in (
-                "create_table", "drop_table", "create_table_like",
-                "truncate", "alter_add", "alter_drop", "create_index",
-                "drop_index", "create_view", "drop_view", "alter_view",
-                "create_sample", "create_topk", "insert_overwrite", "merge",
-                "create_external", "create_stream", "drop_stream",
-            )
-        ):
-            # the reference rejects DDL inside an explicit transaction
-            # (autocommit off); MERGE/OVERWRITE would bypass the buffer
+        if self._tx is not None and stmt.kind in TX_REFUSED_KINDS:
             raise ValueError(
                 f"{stmt.kind} is not allowed inside a transaction"
             )
-        if stmt.kind == "set_schema":
-            self.set_current_schema(stmt.options["schema"])
-            return None
-        if stmt.kind == "create_diskstore":
-            return self._create_diskstore(stmt.options)
-        if stmt.kind == "drop_diskstore":
-            return self._drop_diskstore(stmt.options["name"], stmt.if_not_exists)
-        if stmt.kind == "create_synonym":
-            return self._create_synonym(stmt.table, stmt.source_sql)
-        if stmt.kind == "drop_synonym":
-            return self._drop_synonym(stmt.table, stmt.if_not_exists)
-        if stmt.kind == "call_proc":
-            return self._call_proc(stmt.options["proc"], stmt.options["args"])
         if self._synonyms and stmt.table:
             syn = self._canon(stmt.table)
             if syn in self._synonyms:
-                if stmt.kind in (
-                    "put", "update", "delete", "truncate", "insert_select",
-                    "insert_overwrite", "merge",
-                ):
-                    # DML through a synonym targets the resolved object
-                    # (create-synonym.md: usable in INSERT/UPDATE/DELETE)
+                if stmt.kind in SYNONYM_DML_KINDS:
                     stmt.table = self._resolve_synonym(stmt.table)
                     if not self.catalog.exists(stmt.table):
                         raise ValueError(
@@ -3074,7 +2904,7 @@ class SnappySession:
             # schema-qualified names (APP.t / other.t) canonicalize once
             orig_table = stmt.table.lower()
             stmt.table = self._canon(stmt.table)
-            if stmt.kind in ("update", "delete"):
+            if stmt.kind in ALIASED_KINDS:
                 # normalize every qualifier spelling (user alias, bare
                 # or schema-qualified table name) to ONE alias that the
                 # mutation layer binds on the target frame — REPLACED,
@@ -3091,483 +2921,7 @@ class SnappySession:
                         for k, v in stmt.assignments.items()
                     }
                 stmt.options["alias"] = alias
-        if stmt.kind == "create_table":
-            if self.catalog.exists(stmt.table) and stmt.if_not_exists:
-                return None
-            self._resolve_read_access(stmt.source_sql)
-            df = self.spark.sql(stmt.source_sql) if stmt.source_sql else None
-            self.create_table(
-                stmt.table,
-                schema=stmt.schema_sql if df is None else None,
-                provider=stmt.provider,
-                options=stmt.options,
-                df=df,
-            )
-            return None
-        if stmt.kind == "create_external":
-            opts = dict(stmt.options)
-            path = opts.pop("path", None)
-            return self.create_external_table(
-                stmt.table, path=path, fmt=stmt.provider, options=opts
-            )
-        if stmt.kind == "create_stream":
-            name = stmt.table.lower()
-            if name in self._streams and stmt.if_not_exists:
-                return self._streams[name]
-            from snappydata_spark.streaming.sources import stream_reader
-
-            opts = dict(stmt.options)
-            ts_col = opts.pop("timestampcolumn", None)
-            df = stream_reader(
-                self.spark, stmt.provider, schema=stmt.schema_sql, **opts
-            )
-            df.createOrReplaceTempView(name)
-            self._streams[name] = df
-            if ts_col is None:
-                ts_col = next(
-                    (
-                        f.name
-                        for f in df.schema.fields
-                        if f.dataType.typeName().startswith("timestamp")
-                    ),
-                    None,
-                )
-            self._stream_ts[name] = ts_col
-            return df
-        if stmt.kind == "drop_stream":
-            name = stmt.table.lower()
-            if name not in self._streams:
-                if stmt.if_not_exists:
-                    return None
-                raise ValueError(f"stream table {name} not found")
-            del self._streams[name]
-            self._stream_ts.pop(name, None)
-            self.spark.catalog.dropTempView(name)
-            return None
-        if stmt.kind == "streaming_ctl":
-            op = stmt.options["op"]
-            if op == "init":
-                # STREAMING INIT <n><unit> (streamContext SnappyDDLParser:
-                # 875-888) sets the batch duration — here the processing-
-                # time trigger applied when CQs start
-                self._streaming_trigger = stmt.options["duration"]
-            elif op == "start":
-                self.start_streaming()
-            else:
-                self.stop_streaming()
-            return None
-        if stmt.kind == "create_view":
-            # persistent view over managed tables (createView
-            # SnappyDDLParser:542): recorded in the registry, re-bound per
-            # session AND per referencing query so grants/RLS resolve for
-            # the current user (see _resolve_read_access)
-            self._resolve_read_access(stmt.source_sql)
-            df = self.spark.sql(stmt.source_sql)
-            df.createOrReplaceTempView(stmt.table)
-            self._views[stmt.table] = stmt.source_sql
-            self._save_registry()
-            self.plan_cache.clear()
-            return None
-        if stmt.kind == "alter_view":
-            # ALTER VIEW v AS SELECT (alterView SnappyDDLParser:606):
-            # redefine a registered persistent view; plain temp views
-            # fall through to Spark's own ALTER VIEW
-            if stmt.table in self._views:
-                self._resolve_read_access(stmt.source_sql)
-                self.spark.sql(stmt.source_sql).createOrReplaceTempView(stmt.table)
-                self._views[stmt.table] = stmt.source_sql
-                self._save_registry()
-                self.plan_cache.clear()
-                return None
-            self.plan_cache.clear()
-            return self.spark.sql(text)
-        if stmt.kind == "drop_view":
-            if stmt.table in self._views:
-                del self._views[stmt.table]
-                self._save_registry()
-                self.spark.catalog.dropTempView(stmt.table)
-                self.plan_cache.clear()
-                return None
-            # a plain temp view (or missing): Spark's own DROP VIEW
-            try:
-                return self.spark.sql(text)
-            except Exception:
-                if stmt.if_not_exists:
-                    return None
-                raise
-        if stmt.kind == "create_sample":
-            self._resolve_read_access(stmt.source_sql)
-            return self._create_sample_table(stmt.table, stmt.source_sql, stmt.options)
-        if stmt.kind == "create_topk":
-            self._resolve_read_access(stmt.source_sql)
-            return self._create_topk_table(stmt.table, stmt.source_sql, stmt.options)
-        if stmt.kind == "create_index":
-            return self._create_index(stmt.table, stmt.options)
-        if stmt.kind == "drop_index":
-            ann_info = self._ann_indexes.pop(stmt.options["index"].lower(), None)
-            if ann_info is not None:
-                self._indexes.pop(f"{stmt.options['index'].lower()}__cell", None)
-                self._indexes.pop(f"{stmt.options['index'].lower()}__term", None)
-                self.drop_table(ann_info["index_table"])
-                self._save_registry()
-                return None
-            self._indexes.pop(stmt.options["index"].lower(), None)
-            self._save_registry()
-            return None
-        if stmt.kind == "drop_table" and self.catalog.exists(stmt.table):
-            self.drop_table(stmt.table, if_exists=stmt.if_not_exists)
-            return None
-        if stmt.kind == "create_table_like":
-            if self.catalog.exists(stmt.table) and stmt.if_not_exists:
-                return None
-            return self.create_table_like(stmt.table, stmt.source_sql)
-        if stmt.kind == "alter_add":
-            self.alter_table(stmt.table, add={stmt.options["column"]: stmt.options["type"]})
-            return None
-        if stmt.kind == "alter_drop":
-            self.alter_table(stmt.table, drop=[stmt.options["column"]])
-            return None
-        if stmt.kind == "alter_rls":
-            t = stmt.table.lower()
-            if stmt.options["enable"]:
-                self._rls.add(t)
-            else:
-                self._rls.discard(t)
-            self._save_registry()
-            if self.catalog.exists(t):
-                self._refresh_view(t)
-            return None
-        if stmt.kind == "show_members":
-            return self._show_members()
-        if stmt.kind == "show_create":
-            return self.show_create_table(stmt.table)
-        if stmt.kind == "create_policy":
-            self._policies[stmt.options["policy"].lower()] = (
-                stmt.table.lower(), stmt.where, stmt.options["user"]
-            )
-            self._save_registry()
-            self._refresh_view(stmt.table)
-            return None
-        if stmt.kind == "drop_policy":
-            p = self._policies.pop(stmt.options["policy"].lower(), None)
-            self._save_registry()
-            if p:
-                self._refresh_view(p[0])
-            return None
-        if stmt.kind == "grant_revoke":
-            tbl = stmt.table.lower()
-            privs = stmt.options["privileges"]
-            users = stmt.options["users"]
-            entry = self._grants.setdefault(tbl, {})
-            if stmt.options["verb"] == "grant":
-                for u in users:
-                    entry.setdefault(u, set()).update(privs)
-            else:
-                for u in users:
-                    got = entry.get(u)
-                    if got is None:
-                        continue
-                    if "all" in privs:
-                        got.clear()
-                    else:
-                        got -= set(privs)
-                        # revoking SELECT from an ALL-grantee leaves the
-                        # explicit remainder (the reference decomposes ALL)
-                        if "all" in got and privs:
-                            got.discard("all")
-                            got |= {
-                                "select", "insert", "update", "delete",
-                                "trigger", "references",
-                            } - set(privs)
-                    if not got:
-                        entry.pop(u, None)
-                if not entry:
-                    self._grants.pop(tbl, None)
-            self._save_registry()
-            return None
-        if stmt.kind == "deploy":
-            kind = stmt.options["kind"]
-            coords = stmt.options["coords"]
-            # DEPLOY JAR with a local path actually loads it (Spark-native
-            # ADD JAR — classpath on driver + executors; .py/.zip go
-            # through addPyFile).  DEPLOY PACKAGE resolves maven
-            # coordinates against LOCAL maven-layout repositories only
-            # (REPOS 'file:///...' / local dirs, plus the PATH cache dir —
-            # deployPackages SnappyDDLParser.scala:858-874); remote
-            # repositories are recorded but never fetched: no network in
-            # this engine (documented divergence, SURVEY §8).
-            resolved: list[str] = []
-            for c in coords.split(","):
-                c = c.strip().strip("'\"")
-                if kind == "jar" and os.path.exists(c):
-                    if c.endswith((".py", ".zip")):
-                        self.spark.sparkContext.addPyFile(c)
-                    else:
-                        self.spark.sql(f"ADD JAR '{c}'")
-                elif kind == "package":
-                    jar = self._resolve_maven_local(
-                        c, stmt.options.get("repos"), stmt.options.get("path")
-                    )
-                    if jar is not None:
-                        self.spark.sql(f"ADD JAR '{jar}'")
-                        resolved.append(jar)
-            self._packages[stmt.options["name"].lower()] = {
-                "kind": kind, "coords": coords
-            }
-            if resolved:
-                self._packages[stmt.options["name"].lower()]["resolved"] = (
-                    ",".join(resolved)
-                )
-            self._save_registry()
-            return None
-        if stmt.kind == "undeploy":
-            self._packages.pop(stmt.options["name"].lower(), None)
-            self._save_registry()
-            return None
-        if stmt.kind == "list_packages":
-            return self.spark.createDataFrame(
-                [(k, v["kind"], v["coords"]) for k, v in sorted(self._packages.items())]
-                or [("", "", "")],
-                "name string, kind string, coords string",
-            ).filter("name <> ''")
-        if stmt.kind == "set_conf":
-            self.set_conf(stmt.options["key"], stmt.options["value"])
-            return None
-        if stmt.kind == "put":
-            self._resolve_read_access(stmt.source_sql)
-            src = (
-                self.spark.sql(self._tx_reads(stmt.source_sql))
-                if stmt.source_sql
-                else stmt.source_df
-            )
-            cols = stmt.options.get("columns")
-            self._reject_explicit_null_identities(stmt, src, cols)
-            src = (
-                self._apply_column_list(stmt.table, src, cols)
-                if cols
-                else self._align_source(stmt.table, src)
-            )
-            self.put(stmt.table, src)
-            return None
-        if stmt.kind == "update":
-            self.update(
-                stmt.table,
-                stmt.where or F.lit(True),
-                stmt.assignments,
-                alias=stmt.options.get("alias"),
-            )
-            return None
-        if stmt.kind == "delete":
-            self.delete(
-                stmt.table,
-                stmt.where or F.lit(True),
-                alias=stmt.options.get("alias"),
-            )
-            return None
-        if stmt.kind == "truncate":
-            self.truncate_table(stmt.table)
-            return None
-        if stmt.kind == "insert_select" and self.catalog.exists(stmt.table):
-            self._resolve_read_access(stmt.source_sql)
-            src = self.spark.sql(self._tx_reads(stmt.source_sql))
-            cols = stmt.options.get("columns")
-            self._reject_explicit_null_identities(stmt, src, cols)
-            src = (
-                self._apply_column_list(stmt.table, src, cols)
-                if cols
-                else self._align_source(stmt.table, src)
-            )
-            self.insert(stmt.table, src)
-            return None
-        if stmt.kind == "merge":
-            return self._merge(stmt)
-        if stmt.kind == "insert_overwrite" and self.catalog.exists(stmt.table):
-            # full replace; _rewrite stages to a tmp dir first, which also
-            # legalizes self-referencing overwrites (INSERT OVERWRITE t
-            # SELECT ... FROM t — Spark rejects overwrite-while-reading)
-            self._resolve_read_access(stmt.source_sql)
-
-            # same per-table serialization as insert/put/update, PLUS a
-            # claims drain (_run_exclusive): an unlocked overwrite racing
-            # a concurrent append could commit a manifest that tombstones
-            # the append's files, and a lock-only overwrite racing a
-            # DOWNGRADED claim holder would be resurrected by the
-            # holder's later commit
-            def _overwrite_body():
-                meta = self.catalog.load_meta(stmt.table.lower())
-                aligned = self._align_source(
-                    stmt.table, self.spark.sql(stmt.source_sql)
-                )
-                self._validate_checks(meta, aligned)
-                self._validate_uniques_full(meta, aligned)
-                self._validate_fks(meta, aligned)
-                if self._referencing_fks(meta.name):
-                    self._assert_no_fk_orphans(meta, aligned)
-                self._rewrite(aligned, meta)
-
-            self._run_exclusive(stmt.table.lower(), _overwrite_body)
-            return None
-        m = re.match(
-            r"\s*DESCRIBE\s+HISTORY\s+([A-Za-z_][\w.]*)\s*;?\s*$", text, flags=re.I
-        )
-        if m:
-            # DESCRIBE HISTORY <table> — the SQL face of table_history()
-            hist = self.table_history(m.group(1))
-            return self.spark.createDataFrame(
-                [
-                    (h["gen"], float(h["ts"]) if h["ts"] else None, h["n_files"])
-                    for h in hist
-                ],
-                "gen long, ts double, n_files long",
-            )
-        m = re.match(
-            r"\s*VACUUM\s+([A-Za-z_][\w.]*)\s*;?\s*$", text, flags=re.I
-        )
-        if m:
-            # VACUUM <table> — immediate tombstone GC (SQL face of
-            # vacuum(); retires time-travel history with the files)
-            n = self.vacuum(m.group(1))
-            return self.spark.createDataFrame([(n,)], "files_removed long")
-        m = re.match(
-            r"\s*COMPACT\s+TABLE\s+([A-Za-z_][\w.]*)\s*;?\s*$", text, flags=re.I
-        )
-        if m:
-            # COMPACT TABLE <table> — small-file maintenance (SQL face of
-            # compact_table())
-            n = self.compact_table(m.group(1))
-            return self.spark.createDataFrame([(n,)], "files_after long")
-        if " as of" in low and re.search(
-            r"\b(?:VERSION|TIMESTAMP)\s+AS\s+OF\b", text, flags=re.I
-        ):
-            # FROM <managed> VERSION AS OF <gen> | TIMESTAMP AS OF '<ts>'
-            # — snapshot time travel in SQL: the generation's manifest
-            # resolves to a temp view named by (table, gen), so the
-            # rewritten text stays cache-keyable and the snapshot itself
-            # is immutable
-            def _asof_sub(vm: re.Match) -> str:
-                kw, tbl, kind, spec = vm.groups()
-                if not self.catalog.exists(tbl.lower()):
-                    return vm.group(0)
-                if kind.upper() == "VERSION":
-                    df = self.table_version(tbl, int(spec))
-                    view = f"{tbl.lower()}__asof_{int(spec)}"
-                else:
-                    df = self.table_version(tbl, as_of_ts=spec.strip("'"))
-                    view = (
-                        f"{tbl.lower()}__asofts_"
-                        + re.sub(r"\W", "_", spec.strip("'"))
-                    )
-                df.createOrReplaceTempView(view)
-                return f"{kw} {view}"
-
-            text = re.sub(
-                r"\b(FROM|JOIN)\s+([A-Za-z_]\w*)\s+"
-                r"(VERSION|TIMESTAMP)\s+AS\s+OF\s+(\d+|'[^']+')",
-                _asof_sub,
-                text,
-                flags=re.I,
-            )
-        if "error" in low and re.search(r"\bWITH\s+ERROR\b", text, flags=re.I):
-            parsed = parse_with_error(text)
-            if parsed:
-                self._resolve_read_access(text)
-                return self._approx_sql(*parsed)
-        # plain SELECT path: enforce grants + re-bind RLS policies for the
-        # current user before touching any managed view; plans are cached
-        # per-user (policy-filtered views are user-dependent)
-        self._resolve_read_access(text)
-        topk = self._topk_select(text)
-        if topk is not None:
-            return topk
-        if (
-            self._ann_indexes
-            or "bm25_score" in low
-            or ("--+" in text and "index" in low)
-        ):
-            # ResolveIndex analogue (SnappyOptimizations.scala:110-250):
-            # a top-k query shaped like a registered similarity/inverted
-            # index serves from the index tables; --+ noIndex or
-            # SET snappydata.sql.useIndexes=false opts out (resolve_index.py)
-            from snappydata_spark import resolve_index as _ri
-
-            em = re.match(
-                r"\s*EXPLAIN(?:\s+(?:EXTENDED|CODEGEN|COST|FORMATTED))?\s+"
-                r"(?P<q>(?:SELECT|WITH)\b.*)$",
-                text,
-                re.I | re.S,
-            )
-            if em:
-                # EXPLAIN must show the plan that would actually RUN —
-                # the reference's explain surfaces the injected index
-                # relations the same way (ResolveIndex rewrites before
-                # explain).  Unroutable/opted-out queries fall through
-                # to Spark's own EXPLAIN of the full-scan form.
-                routed = _ri.try_route(self, em.group("q"))
-                if routed is not None:
-                    plan = (
-                        "== Routed by ResolveIndex (materialized index "
-                        "serve; --+ noIndex for the scan plan) ==\n"
-                        + routed._jdf.queryExecution().executedPlan().toString()
-                    )
-                    return self.spark.createDataFrame([(plan,)], "plan string")
-            routed = _ri.try_route(self, text)
-            if routed is not None:
-                return routed
-        rewritten = rewrite_builtins(text, self.current_schema)
-        if self._streams:
-            windowed = rewrite_stream_windows(
-                rewritten,
-                lambda n: self._stream_ts.get(n.lower())
-                if n.lower() in self._streams
-                else None,
-            )
-            # relation-position match only (FROM s / JOIN s / comma-join
-            # ", s") — a column, alias, or string literal that merely
-            # mentions a stream name must not bypass the plan cache.  A
-            # comma counts as a relation position only while still inside
-            # a FROM list (the most recent clause keyword is FROM), so
-            # "SELECT x, s FROM t" with a stream named s stays cacheable.
-            def _mentions_stream_relation(s: str) -> bool:
-                for m in re.finditer(
-                    rf"(?:\bFROM\b|\bJOIN\b|,)\s*{re.escape(s)}\b",
-                    rewritten,
-                    flags=re.I,
-                ):
-                    if not m.group(0).startswith(","):
-                        return True
-                    prefix = rewritten[: m.start()]
-                    kws = re.findall(
-                        r"\b(FROM|SELECT|WHERE|GROUP|ORDER|HAVING|ON)\b",
-                        prefix,
-                        flags=re.I,
-                    )
-                    if kws and kws[-1].upper() == "FROM":
-                        return True
-                return False
-
-            if windowed != rewritten or any(
-                _mentions_stream_relation(s) for s in self._streams
-            ):
-                # query touches a stream relation: the result is a live
-                # streaming DataFrame — never cache it (plan cache entries
-                # would pin stale readStream handles)
-                return self.spark.sql(windowed)
-        head = re.match(r"\s*\(*\s*(\w+)", rewritten)
-        if head and head.group(1).upper() in ("SELECT", "WITH", "VALUES", "TABLE"):
-            if self._tx is not None or getattr(self, "_skip_plan_cache", False):
-                # overlay views change per staged op — never cache plans
-                # resolved inside an open transaction; sql_uncached
-                # callers asked for a fresh plan explicitly
-                return self.spark.sql(rewritten)
-            return self.plan_cache.get_or_build(
-                self.spark, rewritten, scope=self.current_user
-            )
-        # passthrough DDL/commands (CREATE VIEW, ALTER VIEW, CACHE, ...)
-        # can redefine objects cached plans depend on — never cache them,
-        # and conservatively invalidate (ALTER VIEW ... AS must not leave
-        # a stale analyzed plan behind)
-        self.plan_cache.clear()
-        return self.spark.sql(rewritten)
+        return HANDLERS[stmt.kind](self, stmt, text)
 
     # ------------------------------------------------------- continuous query
 
@@ -4422,298 +3776,6 @@ class SnappySession:
             out = out.select(*wanted)
         return out
 
-    # ------------------------------------------------------- system procs
-
-    def _call_proc(self, proc: str, args: list[str]):
-        """CALL SYS.<proc>(...) dispatch
-        (reference/inbuilt_system_procedures/)."""
-        if proc == "diskstore_fsync":
-            # sys.diskstore_fsync (GemFireXD surface): force-fsync a disk
-            # store's oplogs.  DIVERGENCE: manifests here commit via
-            # atomic rename (already durable) — accepted as a no-op after
-            # validating the store exists, so reference scripts replay.
-            (name,) = args or ("",)
-            if name.lower() not in self._all_diskstores():
-                raise ValueError(f"diskstore '{name}' does not exist")
-            return self.spark.createDataFrame(
-                [(name.upper(), "synced")], "diskstore string, status string"
-            )
-        if proc == "export_data":
-            return self._export_data(*args)
-        if proc == "export_ddls":
-            return self._export_ddls(*args)
-        if proc == "rebalance_all_buckets":
-            # reference: redistributes bucket data across members
-            # (rebalance-all-buckets.md).  The file-layout analogue:
-            # rewrite every BUCKETED table through its bucketed writer,
-            # re-hashing rows into their buckets — evening out file
-            # sizes after skewed appends.  Unbucketed tables have no
-            # buckets to balance and are untouched.
-            rows = []
-            for t in self.catalog.list_tables():
-                meta = self.catalog.load_meta(t)
-                if self._is_bucketed(meta):
-                    rows.append((t, self.compact_table(t)))
-            return self.spark.createDataFrame(
-                rows or [("", 0)], "table string, buckets int"
-            ).filter(F.col("table") != "")
-        if proc == "dump_stacks":
-            # sys.dump_stacks(all) (dump-stacks.md): thread stacks to the
-            # log.  Here: the DRIVER JVM's stacks via
-            # Thread.getAllStackTraces (executors are in-process on
-            # local[n]; on a cluster the `all` flag would fan out — the
-            # lead-only scope is the documented divergence).
-            traces = (
-                self.spark.sparkContext._jvm.java.lang.Thread
-                .getAllStackTraces()
-            )
-            it = traces.entrySet().iterator()
-            n_threads, lines = 0, []
-            while it.hasNext():
-                e = it.next()
-                t = e.getKey()
-                n_threads += 1
-                lines.append(
-                    f'"{t.getName()}" state={t.getState().toString()} '
-                    f"frames={len(e.getValue())}"
-                )
-            print("SYS.DUMP_STACKS:\n" + "\n".join(sorted(lines)))
-            return self.spark.createDataFrame(
-                [(n_threads,)], "threads int"
-            )
-        if proc == "set_trace_flag":
-            flag, on = (args + ["", "false"])[:2]
-            self._engine_confs[f"snappydata.trace.{flag.lower()}"] = (
-                str(on).lower()
-            )
-            return None
-        if proc in ("set_critical_heap_percentage",
-                    "set_eviction_heap_percentage"):
-            (pct,) = args or ("",)
-            v = float(pct)
-            if not 0.0 <= v <= 100.0:
-                raise ValueError(
-                    f"SYS.{proc.upper()} expects a percentage in [0, 100], "
-                    f"got {pct}"
-                )
-            # recorded, inert: Spark sizes executor memory statically
-            # (spark.memory.fraction at launch) — the reference's
-            # runtime heap thresholds have no live Spark equivalent
-            self._engine_confs[f"snappydata.{proc}"] = str(v)
-            return None
-        if proc == "set_statistics_timing":
-            (flag,) = args or ("0",)
-            self._stats_timing = str(flag).strip() not in ("0", "false", "")
-            if not self._stats_timing:
-                self._stmt_stats.clear()
-            return None
-        if proc == "backup_store":
-            (dest,) = args or ("",)
-            path = self.backup_store(dest)
-            return self.spark.createDataFrame(
-                [(path, len(self.catalog.list_tables()))],
-                "backup_path string, tables int",
-            )
-        if proc == "restore_store":
-            (src,) = args or ("",)
-            n = self.restore_store(src)
-            return self.spark.createDataFrame(
-                [(src, n)], "backup_path string, tables int"
-            )
-        if proc == "recover_table":
-            (t,) = args or ("",)
-            return self.recover_table(t)
-        if proc == "remove_metastore_entry":
-            # sys.remove_metastore_entry('<db>.<table>', '<forceDrop>')
-            # (sys_remove_metastore_entry.md): drop the catalog entry
-            # WITHOUT existence/constraint/policy checks — the emergency
-            # hatch for an inconsistent catalog.  Policies/base tables
-            # are intentionally untouched (the doc says drop those
-            # separately).
-            name = self._canon((args or [""])[0])
-            self.catalog.drop(name)
-            try:
-                self.spark.catalog.dropTempView(name)
-            except Exception:  # noqa: BLE001 — view may not exist
-                pass
-            self.plan_cache.clear()
-            return None
-        raise ValueError(
-            f"unknown system procedure SYS.{proc.upper()} "
-            "(supported: EXPORT_DATA, EXPORT_DDLS, REBALANCE_ALL_BUCKETS, "
-            "DISKSTORE_FSYNC, DUMP_STACKS, SET_TRACE_FLAG, "
-            "SET_CRITICAL_HEAP_PERCENTAGE, SET_EVICTION_HEAP_PERCENTAGE, "
-            "SET_STATISTICS_TIMING, REMOVE_METASTORE_ENTRY, BACKUP_STORE, "
-            "RESTORE_STORE, RECOVER_TABLE)"
-        )
-
-    def _export_data(
-        self, uri: str, fmt: str = "parquet", tables: str = "all",
-        ignore_error: str = "false",
-    ) -> DataFrame:
-        """SYS.EXPORT_DATA (export_data.md): write each managed table to
-        `<uri>_<millis>/<SCHEMA>.<TABLE>/` in the given Spark format.
-        tables='all' exports every user table (derived sample/topk/index
-        structures are rebuilt by their DDL, not exported);
-        ignoreError='true' logs a failing table and continues.  Returns a
-        (table, path, rows) summary frame.  Scale: each export is one
-        distributed write of that table's scan — no driver collect."""
-        import time as _time
-
-        out_dir = f"{uri.rstrip('/')}_{int(_time.time() * 1000)}"
-        if tables.strip().lower() == "all":
-            names = [
-                t for t in self.catalog.list_tables()
-                if self.catalog.load_meta(t).provider
-                not in ("sample", "topk")
-                and not t.endswith("__ann")
-            ]
-        else:
-            names = [self._canon(t) for t in tables.split(",") if t.strip()]
-        ignore = ignore_error.strip().lower() == "true"
-        rows = []
-        for t in names:
-            label = t.replace("__", ".").upper()
-            path = os.path.join(out_dir, f"APP.{label}" if "." not in label else label)
-            try:
-                df = self.table(t)
-                w = df.write.mode("overwrite").format(fmt.lower())
-                if fmt.lower() == "csv":
-                    w = w.option("header", "true")
-                w.save(path)
-                rows.append((t, path, df.count()))
-            except Exception as e:  # noqa: BLE001 — per-table isolation
-                if not ignore:
-                    raise
-                print(f"EXPORT_DATA: skipped {t}: {e}")
-                rows.append((t, "", -1))
-        return self.spark.createDataFrame(
-            rows, "table string, path string, rows long"
-        )
-
-    def _export_ddls(self, uri: str) -> DataFrame:
-        """SYS.EXPORT_DDLS (export_ddl.md): every DDL needed to rebuild
-        the catalog — tables (SHOW CREATE TABLE form), views, synonyms,
-        sample/topk structures, grants, policies, deployed packages —
-        written as one text file `part-00000` (+ _SUCCESS) under
-        `<uri>_<millis>/`, replayable in order."""
-        import time as _time
-
-        out_dir = f"{uri.rstrip('/')}_{int(_time.time() * 1000)}"
-        os.makedirs(out_dir, exist_ok=True)
-        ddls: list[str] = []
-        # diskstores replay FIRST: a table's `diskstore` option must
-        # resolve when its CREATE TABLE replays
-        for dn, rec in self._diskstores.items():
-            clauses = [f"CREATE DISKSTORE {dn}"]
-            for k in ("maxlogsize", "autocompact", "allowforcecompaction",
-                      "compactionthreshold", "timeinterval",
-                      "writebuffersize", "queuesize"):
-                if rec.get(k) != self._DISKSTORE_DEFAULTS[k]:
-                    clauses.append(f"{k.upper()} {rec[k]}")
-            dir_sql = ", ".join(
-                f"'{d}'" + (f" {mb}" if mb else "") for d, mb in rec["dirs"]
-            )
-            ddls.append(" ".join(clauses) + f" ({dir_sql});")
-        derived: list[str] = []  # sample/topk DDL replays AFTER its base
-        for t in self.catalog.list_tables():
-            meta = self.catalog.load_meta(t)
-            if meta.provider == "sample":
-                opts = meta.options
-                derived.append(
-                    f"CREATE SAMPLE TABLE {t} ON {opts['base_table']} "
-                    f"OPTIONS (qcs '{opts['qcs']}', fraction "
-                    f"'{opts['fraction']}');"
-                )
-                continue
-            if meta.provider == "topk":
-                opts = meta.options
-                parts = [f"key '{opts['key']}'", f"size '{opts['k']}'"]
-                if opts.get("window") not in (None, "all"):
-                    parts += [
-                        f"timeSeriesColumn '{opts['ts']}'",
-                        f"timeInterval '{opts['window']}'",
-                    ]
-                derived.append(
-                    f"CREATE TOPK TABLE {t} ON {opts['base_table']} "
-                    f"OPTIONS ({', '.join(parts)});"
-                )
-                continue
-            if t.endswith("__ann"):
-                continue  # rebuilt by its CREATE INDEX below
-            try:
-                stmt = self.show_create_table(t).collect()[0].createtab_stmt
-                ddls.append(stmt.rstrip(";") + ";")
-            except Exception:  # noqa: BLE001 — e.g. dropped mid-export
-                continue
-        # layout (range/Z-ORDER) indexes — skipping the ones the ANN
-        # CREATE INDEX replay recreates itself (<ann>__cell / <ann>__term)
-        auto = {
-            f"{a}__{suffix}"
-            for a in self._ann_indexes
-            for suffix in ("cell", "term")
-        }
-        for idx_name, (itable, icols) in self._indexes.items():
-            if idx_name in auto:
-                continue
-            ddls.append(
-                f"CREATE INDEX {idx_name} ON {itable} ({', '.join(icols)});"
-            )
-        for idx_name, info in self._ann_indexes.items():
-            ddls.append(
-                f"CREATE INDEX {idx_name} ON {info['table']}"
-                f"({info['column']}) USING {info['method']};"
-            )
-        ddls.extend(derived)
-        for vname, vsql in self._views.items():
-            ddls.append(f"CREATE VIEW {vname} AS {vsql};")
-        for syn, tgt in self._synonyms.items():
-            ddls.append(f"CREATE SYNONYM {syn} FOR {tgt};")
-        for scope, users in self._grants.items():
-            for u in sorted(users):
-                privs = sorted(users[u])
-                if scope.startswith("function::"):
-                    ddls.append(
-                        f"GRANT EXECUTE ON FUNCTION "
-                        f"{scope.split('::', 1)[1]} TO {u};"
-                    )
-                    continue
-                plist = "ALL" if "all" in privs else ", ".join(
-                    p.upper() for p in privs
-                )
-                ddls.append(f"GRANT {plist} ON {scope} TO {u};")
-        for pname, (ptable, pexpr, puser) in self._policies.items():
-            to = f" TO {puser}" if puser else ""
-            ddls.append(
-                f"CREATE POLICY {pname} ON {ptable} FOR SELECT{to} "
-                f"USING ({pexpr});"
-            )
-        for t in sorted(self._rls):
-            ddls.append(f"ALTER TABLE {t} ENABLE ROW LEVEL SECURITY;")
-        for pkg, info in self._packages.items():
-            kind = info.get("kind", "package").upper()
-            ddls.append(f"DEPLOY {kind} {pkg} '{info.get('coords', '')}';")
-        # connection/system properties that shape statement semantics
-        # replay too, so an EXPORT_DDLS-restored session behaves like the
-        # one that exported (allow-explicit-commit.md, query-timeout.md)
-        for prop in (
-            "snappydata.allow-explicit-commit",
-            "snappydata.skip-constraint-checks",
-            "snappydata.query-timeout",
-            "snappydata.query-cancellation-interval",
-            "snappydata.max-lock-wait",
-        ):
-            v = self._engine_confs.get(prop)
-            if v is not None:
-                ddls.append(f"SET {prop} = {v};")
-        with open(os.path.join(out_dir, "part-00000"), "w") as f:
-            f.write("\n".join(ddls) + "\n")
-        open(os.path.join(out_dir, "_SUCCESS"), "w").close()
-        return self.spark.createDataFrame(
-            [(os.path.join(out_dir, "part-00000"), len(ddls))],
-            "path string, statements int",
-        )
-
     # -------------------------------------------------- store backup/restore
 
     def backup_store(self, dest_dir: str) -> str:
@@ -5015,88 +4077,6 @@ class SnappySession:
                 "table string, mode string, files int, skipped int, rows long",
             )
 
-    def _systables(self) -> DataFrame:
-        """SYS.SYSTABLES (reference/system_tables/systables.md): one row
-        per table/view/synonym with the documented core columns —
-        TABLETYPE 'T' (user table), 'V' (view), 'A' (synonym);
-        DATAPOLICY from the managed layout (PARTITION / REPLICATE)."""
-        rows = []
-        for t in self.catalog.list_tables():
-            meta = self.catalog.load_meta(t)
-            replicated = meta.options.get("replicated", "").lower() == "true"
-            rows.append(
-                (
-                    t.upper(),
-                    "T",
-                    "APP",
-                    "REPLICATE" if replicated else "PARTITION",
-                    meta.provider,
-                )
-            )
-        for v in self._views:
-            rows.append((v.upper(), "V", "APP", "", "view"))
-        for s in self._synonyms:
-            rows.append((s.upper(), "A", "APP", "", "synonym"))
-        return self.spark.createDataFrame(
-            rows,
-            "tablename string, tabletype string, tableschemaname string, "
-            "datapolicy string, provider string",
-        )
-
-    def _syspolicies(self) -> DataFrame:
-        """SYS.SYSPOLICIES (docs/security/row_level_security.md:126): one
-        row per RLS policy — NAME, SCHEMANAME, TABLENAME, POLICYFOR
-        (always SELECT, as documented), APPLYTO (user or CURRENT_USER),
-        FILTER, OWNER (the target table's schema owner)."""
-        rows = []
-        for pname, (table, filter_sql, user) in self._policies.items():
-            if "__" in table:
-                sch, tbl = table.split("__", 1)
-            else:
-                sch, tbl = "app", table
-            rows.append((
-                pname.upper(), sch.upper(), tbl.upper(), "SELECT",
-                (user or "current_user").upper(), filter_sql, sch.upper(),
-            ))
-        return self.spark.createDataFrame(
-            rows or [("", "", "", "", "", "", "")],
-            "name string, schemaname string, tablename string, "
-            "policyfor string, applyto string, filter string, owner string",
-        ).filter(F.col("name") != "")
-
-    def _systablestats(self) -> DataFrame:
-        """SYS.TABLESTATS (reference/system_tables/systablestats.md):
-        per-table row count / on-disk size / layout flags — sizes from
-        ANALYZE TABLE (cached in table meta after the first call)."""
-        rows = []
-        for t in self.catalog.list_tables():
-            meta = self.catalog.load_meta(t)
-            opts = meta.options
-            if "row_count" not in opts or "size_bytes" not in opts:
-                try:
-                    self.analyze_table(t)
-                    opts = self.catalog.load_meta(t).options
-                except Exception:  # noqa: BLE001 — unreadable table
-                    continue
-            replicated = opts.get("replicated", "").lower() == "true"
-            rows.append(
-                (
-                    f"APP.{t.upper()}",
-                    meta.provider != "row",
-                    replicated,
-                    int(opts.get("row_count", 0)),
-                    int(opts.get("size_bytes", 0)),
-                    int(opts.get("size_bytes", 0)),
-                    int(meta.buckets or 1),
-                )
-            )
-        return self.spark.createDataFrame(
-            rows,
-            '`table` string, is_column_table boolean, '
-            "is_replicated_table boolean, row_count long, "
-            "size_in_memory long, total_size long, buckets long",
-        )
-
     # ------------------------------------------------------------- synonyms
 
     def _resolve_synonym(self, name: str) -> str:
@@ -5114,203 +4094,6 @@ class SnappySession:
             seen.add(n)
             n = self._synonyms[n]
         return n
-
-    # ------------------------------------------------------- disk stores
-
-    #: the reference's built-in stores (sysdiskstores.md example output):
-    #: data-dictionary + default-data stores exist in every system
-    _BUILTIN_DISKSTORES = {
-        "gfxd-dd-diskstore": {"maxlogsize": 10},
-        "gfxd-default-diskstore": {},
-    }
-    _DISKSTORE_DEFAULTS = {
-        # create-diskstore.md documented defaults: MAXLOGSIZE 1 GB,
-        # AUTOCOMPACT true, ALLOWFORCECOMPACTION false,
-        # COMPACTIONTHRESHOLD 50 %, TIMEINTERVAL 1000 ms,
-        # WRITEBUFFERSIZE 32768 B, QUEUESIZE 0 (unbounded)
-        "maxlogsize": 1024,
-        "autocompact": "true",
-        "allowforcecompaction": "false",
-        "compactionthreshold": 50,
-        "timeinterval": 1000,
-        "writebuffersize": 32768,
-        "queuesize": 0,
-    }
-
-    def _create_diskstore(self, opts: dict) -> None:
-        """CREATE DISKSTORE (create-diskstore.md:6-20).  DIVERGENCE:
-        GemFire preallocates oplog files; this engine's storage is
-        parquet files under an atomic manifest, so the store is catalog
-        metadata — its directories are created under the store dir and
-        recorded so SYSDISKSTORES/EXPORT_DDLS/table `diskstore` options
-        resolve, but no oplogs exist to roll or compact."""
-        name = opts["name"].lower()
-        if name in self._diskstores or name in self._BUILTIN_DISKSTORES:
-            raise ValueError(f"diskstore '{opts['name']}' already exists")
-        rec = dict(self._DISKSTORE_DEFAULTS)
-        for k in rec:
-            if k in opts:
-                v = str(opts[k]).lower()
-                if k in ("autocompact", "allowforcecompaction"):
-                    if v not in ("true", "false"):
-                        raise ValueError(
-                            f"CREATE DISKSTORE {k.upper()} expects a "
-                            f"boolean constant, got '{opts[k]}'"
-                        )
-                    rec[k] = v
-                else:
-                    rec[k] = int(v)
-        dirs = []
-        for d, mb in opts.get("dirs", []):
-            path = d if os.path.isabs(d) else os.path.join(
-                self.catalog.base_dir, "diskstores", name, d
-            )
-            os.makedirs(path, exist_ok=True)
-            dirs.append([path, mb])
-        if not dirs:
-            # default: the member working directory (create-diskstore.md
-            # "By default ... the working directory of the member")
-            path = os.path.join(self.catalog.base_dir, "diskstores", name)
-            os.makedirs(path, exist_ok=True)
-            dirs.append([path, None])
-        rec["dirs"] = dirs
-        self._diskstores[name] = rec
-        # cached SELECTs over SYS.SYSDISKSTORES pinned the pre-create view
-        self.plan_cache.clear()
-        self._save_registry()
-
-    def _drop_diskstore(self, name: str, if_exists: bool) -> None:
-        """DROP DISKSTORE [IF EXISTS] (drop-diskstore.md) — blocked while
-        any table's `diskstore` option still targets the store (the
-        reference fails the drop while a table uses it)."""
-        n = name.lower()
-        if n in self._BUILTIN_DISKSTORES:
-            raise ValueError(f"cannot drop built-in diskstore '{name}'")
-        if n not in self._diskstores:
-            if if_exists:
-                return
-            raise ValueError(f"diskstore '{name}' does not exist")
-        users = [
-            t for t in self.catalog.list_tables()
-            if str(
-                self.catalog.load_meta(t).options.get("diskstore", "")
-            ).lower() == n
-        ]
-        if users:
-            raise ValueError(
-                f"cannot drop diskstore '{name}': in use by table(s) "
-                f"{', '.join(sorted(users))}"
-            )
-        self._diskstores.pop(n)
-        self.plan_cache.clear()
-        self._save_registry()
-
-    def _all_diskstores(self) -> dict:
-        out = {
-            k: {**self._DISKSTORE_DEFAULTS, **v,
-                "dirs": [[self.catalog.base_dir, None]]}
-            for k, v in self._BUILTIN_DISKSTORES.items()
-        }
-        out.update(self._diskstores)
-        return out
-
-    def _sysdiskstores(self) -> DataFrame:
-        """SYS.SYSDISKSTORES (system_tables/sysdiskstores.md): one row per
-        disk store with the documented columns; DIR_PATH_SIZE is the
-        comma-joined 'dir[ size-mb]' list."""
-        rows = []
-        for n, rec in self._all_diskstores().items():
-            rows.append((
-                n.upper(),
-                int(rec["maxlogsize"]),
-                str(rec["autocompact"]),
-                str(rec["allowforcecompaction"]),
-                int(rec["compactionthreshold"]),
-                int(rec["timeinterval"]),
-                int(rec["writebuffersize"]),
-                int(rec["queuesize"]),
-                ",".join(
-                    f"{d} {mb}" if mb else d for d, mb in rec["dirs"]
-                ),
-            ))
-        return self.spark.createDataFrame(
-            rows,
-            "name string, maxlogsize bigint, autocompact string, "
-            "allowforcecompaction string, compactionthreshold int, "
-            "timeinterval bigint, writebuffersize int, queuesize int, "
-            "dir_path_size string",
-        )
-
-    def _sysdiskstoreids(self) -> DataFrame:
-        """SYS.SYSDISKSTOREIDS / SYS.DISKSTOREIDS
-        (system_tables/sysdiskstoreids.md): per-member store ids — one
-        member here (the driver); IDs are stable uuid5 digests of the
-        store path so repeated queries agree."""
-        member = self._member_id()
-        rows = []
-        for n, rec in self._all_diskstores().items():
-            sid = str(uuid.uuid5(
-                uuid.NAMESPACE_URL, f"{self.catalog.base_dir}/{n}"
-            ))
-            rows.append((
-                member, n.upper(), sid,
-                ",".join(d for d, _ in rec["dirs"]),
-            ))
-        return self.spark.createDataFrame(
-            rows, "memberid string, name string, id string, dirs string"
-        )
-
-    def _create_synonym(self, name: str, target: str) -> None:
-        """CREATE SYNONYM s FOR t (create-synonym.md): synonyms share the
-        table/view namespace; the target may not exist yet (warning, not
-        error); circular references are rejected at creation."""
-        syn = self._canon(name)
-        if self.catalog.exists(syn) or syn in self._views or syn in self._streams:
-            raise ValueError(
-                f"'{name}' already names a table or view — synonyms share "
-                "that namespace (create-synonym.md)"
-            )
-        if syn in self._synonyms:
-            raise ValueError(f"synonym '{name}' already exists")
-        tgt = self._canon(target)
-        # creating s -> t must not close a cycle: resolving t must never
-        # reach s (SQLSTATE 42916)
-        n, seen = tgt, set()
-        while n in self._synonyms:
-            if n == syn or n in seen:
-                raise ValueError(
-                    f"CREATE SYNONYM {name} FOR {target} would create a "
-                    "circular reference (SQLSTATE 42916)"
-                )
-            seen.add(n)
-            n = self._synonyms[n]
-        if n == syn:
-            raise ValueError(
-                f"CREATE SYNONYM {name} FOR {target} would create a "
-                "circular reference (SQLSTATE 42916)"
-            )
-        if not (self.catalog.exists(n) or n in self._views or n in self._streams):
-            # the reference warns (SQLSTATE 01522) and creates anyway;
-            # the target must exist when the synonym is USED
-            print(
-                f"WARNING 01522: synonym target '{target}' does not exist "
-                "yet — it must be present when the synonym is used"
-            )
-        self._synonyms[syn] = tgt
-        self._save_registry()
-
-    def _drop_synonym(self, name: str, if_exists: bool = False) -> None:
-        syn = self._canon(name)
-        if syn not in self._synonyms:
-            if if_exists:
-                return
-            raise ValueError(f"synonym '{name}' does not exist")
-        del self._synonyms[syn]
-        try:
-            self.spark.catalog.dropTempView(syn)
-        except Exception:  # noqa: BLE001 — never registered
-            pass
-        self._save_registry()
 
     # ----------------------------------------------------------- sample/index
 

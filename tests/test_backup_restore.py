@@ -140,3 +140,28 @@ def test_restore_drops_tables_created_after_backup(snappy, spark, tmp_path):
     assert "br_old" in snappy.catalog.list_tables()
     assert "br_new" not in snappy.catalog.list_tables()
     assert snappy.table("br_old").count() == 1
+
+
+def test_restore_into_relative_store_keeps_bucketed_rows(
+    spark, tmp_path, monkeypatch
+):
+    """A store opened with a relative store_dir: the restored bucketed
+    table's LOCATION must name the restored files, not a path Spark
+    resolves under its warehouse dir (where it finds no rows)."""
+    from snappydata_spark import SnappySession
+
+    monkeypatch.chdir(tmp_path)
+    src = SnappySession(spark, store_dir="rel_src")
+    src.create_table(
+        "rel_bt",
+        options={"key_columns": "id", "partition_by": "grp", "buckets": 4},
+        df=spark.createDataFrame(
+            [(i, i % 5, float(i)) for i in range(100)],
+            "id int, grp int, amt double",
+        ),
+    )
+    assert src.table("rel_bt").count() == 100
+    bdir = src.backup_store("rel_backup")
+    dst = SnappySession(spark, store_dir="rel_dst")
+    assert dst.restore_store(bdir) == 1
+    assert dst.table("rel_bt").count() == 100

@@ -127,6 +127,9 @@ _STMT_KEYWORDS = [
     "INSERT INTO t VALUES (1)", "CREATE TABLE t (a INT)",
     "GRANT SELECT ON t TO u", "CALL SYS.EXPORT_DATA('x')",
     "CREATE SYNONYM s FOR t", "DEPLOY PACKAGE p 'g:a:v'",
+    "BEGIN", "START TRANSACTION", "COMMIT", "ROLLBACK", "AUTOCOMMIT OFF",
+    "SET ISOLATION READ COMMITTED", "DESCRIBE HISTORY t", "VACUUM t",
+    "COMPACT TABLE t",
 ]
 
 
@@ -154,3 +157,12 @@ def test_statement_heads_still_dispatch(stmt_text):
     """Real statements (non-query heads) must keep reaching their
     patterns through the gate."""
     assert split_statement(stmt_text).kind != "passthrough"
+
+
+def test_every_statement_kind_has_a_handler():
+    """split_statement is the one classifier and statements.HANDLERS the
+    one dispatch table: every kind it returns must have a handler."""
+    from snappydata_spark.statements import HANDLERS
+
+    for text in _STMT_KEYWORDS + ["SELECT 1"]:
+        assert split_statement(text).kind in HANDLERS, text

@@ -7,12 +7,7 @@ at ~0.04 ms/statement; this guard fails if a future rewriter lands
 ungated and drags the plain-SELECT path back toward the ~0.3 ms it cost
 before round 7 (plan_cache_20_cold drift, BENCH r5→r6)."""
 
-import pytest
-
 import time
-
-# r13: excluded from the default (driver) test lane — see pytest.ini
-pytestmark = pytest.mark.slow
 
 
 class _NoopCache:

@@ -584,6 +584,19 @@ def test_sample_table_inherits_base_rls_and_grants(snappy):
         snappy.sql("DROP POLICY IF EXISTS p_alice")
 
 
+def test_unknown_system_procedure_names_every_supported_one(snappy):
+    with pytest.raises(ValueError, match=r"SYS\.NO_SUCH_PROC") as err:
+        snappy.sql("CALL SYS.NO_SUCH_PROC()")
+    for proc in (
+        "EXPORT_DATA", "EXPORT_DDLS", "REBALANCE_ALL_BUCKETS",
+        "DISKSTORE_FSYNC", "DUMP_STACKS", "SET_TRACE_FLAG",
+        "SET_CRITICAL_HEAP_PERCENTAGE", "SET_EVICTION_HEAP_PERCENTAGE",
+        "SET_STATISTICS_TIMING", "REMOVE_METASTORE_ENTRY", "BACKUP_STORE",
+        "RESTORE_STORE", "RECOVER_TABLE",
+    ):
+        assert proc in str(err.value)
+
+
 def test_sys_export_data_and_ddls(snappy, tmp_path):
     """CALL SYS.EXPORT_DATA / SYS.EXPORT_DDLS
     (reference/inbuilt_system_procedures/export_data.md, export_ddl.md):
