@@ -49,10 +49,21 @@ def put_into_df(target: DataFrame, source: DataFrame, keys: list[str]) -> DataFr
     would depend on partition order."""
     if not keys:
         raise ValueError("PUT INTO requires key columns (PrePutCheck)")
+    conflated = conflate_last(source.select(*target.columns), keys)
+    return replace_on_keys(target, conflated, keys, conflated)
+
+
+def replace_on_keys(
+    target: DataFrame, batch: DataFrame, keys: list[str], rows: DataFrame | None = None
+) -> DataFrame:
+    """Rows of `target` whose key tuple is absent from `batch`, plus
+    `rows` projected onto the target's columns — the one keyed replace
+    behind PUT INTO (rows = the conflated batch), deleteFrom (rows =
+    None) and a CDC batch (rows = its non-delete events, so the result
+    equals delete_from_df of the deletes followed by put_into_df)."""
     cols = target.columns
-    conflated = conflate_last(source.select(*cols), keys)
-    keep = _anti_on_keys(target, conflated, keys)
-    return keep.select(*cols).unionByName(conflated.select(*cols))
+    keep = _anti_on_keys(target, batch, keys).select(*cols)
+    return keep if rows is None else keep.unionByName(rows.select(*cols))
 
 
 def conflate_last(source: DataFrame, keys: list[str]) -> DataFrame:
@@ -111,7 +122,7 @@ def delete_from_df(target: DataFrame, source: DataFrame, keys: list[str]) -> Dat
     delete target rows whose key tuple appears in `source`."""
     if not keys:
         raise ValueError("deleteFrom requires key columns")
-    return _anti_on_keys(target, source, keys).select(*target.columns)
+    return replace_on_keys(target, source, keys)
 
 
 def merge_df(

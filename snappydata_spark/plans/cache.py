@@ -32,15 +32,27 @@ from collections import OrderedDict
 from pyspark.sql import DataFrame, SparkSession
 
 # string literals first (so numbers inside strings aren't tokenized), then
-# numeric literals not part of an identifier.  Double-quoted text is
-# PROTECTED but not parameterized: under Spark's default dialect "..." is
-# a string literal, under ANSI double-quoted-identifiers it's an
-# identifier — either way its contents must not be tokenized (a number
-# inside would otherwise leave a :pN marker INSIDE the literal, which
-# parses fine with the arg unused and silently compares against ':pN').
+# numeric literals not part of an identifier.  PROTECTED text is kept
+# verbatim, never parameterized:
+# - double-quoted text: under Spark's default dialect "..." is a string
+#   literal, under ANSI double-quoted-identifiers it's an identifier —
+#   either way its contents must not be tokenized (a number inside would
+#   otherwise leave a :pN marker INSIDE the literal, which parses fine
+#   with the arg unused and silently compares against ':pN');
+# - the string of a typed literal (DATE '...', TIMESTAMP '...',
+#   INTERVAL '...', X'...'): it is part of the literal's syntax —
+#   `TIMESTAMP :p0` parses as a column named TIMESTAMP.
 _STRING = re.compile(r"'(?:[^'\\]|\\.)*'")
-_DQUOTED = re.compile(r'"(?:[^"\\]|\\.)*"')
+_PROTECTED = re.compile(
+    r'"(?:[^"\\]|\\.)*"'
+    r"|(?<![\w.])(?i:DATE|TIMESTAMP(?:_NTZ|_LTZ)?|INTERVAL|X)\s*"
+    + _STRING.pattern
+)
 _NUMBER = re.compile(r"(?<![\w'\.])-?\d+(?:\.\d+)?(?:[eE][+-]?\d+)?(?![\w'])")
+# one pass finds protected / string / number occurrences in text order
+_LITERAL = re.compile(
+    f"(?P<keep>{_PROTECTED.pattern})|{_STRING.pattern}|{_NUMBER.pattern}"
+)
 
 
 def normalize_sql(text: str) -> tuple[str, list[str]]:
@@ -48,17 +60,12 @@ def normalize_sql(text: str) -> tuple[str, list[str]]:
     values: list[str] = []
 
     def _sub(m: re.Match) -> str:
-        if m.group(0).startswith('"'):
-            return m.group(0)  # protected verbatim, never parameterized
+        if m.group("keep"):
+            return m.group(0)
         values.append(m.group(0))
         return f":p{len(values) - 1}"
 
-    # one pass: find string / double-quoted / number occurrences in order
-    combined = re.compile(
-        f"(?:{_STRING.pattern})|(?:{_DQUOTED.pattern})|(?:{_NUMBER.pattern})"
-    )
-    template = combined.sub(_sub, text)
-    return template, values
+    return _LITERAL.sub(_sub, text), values
 
 
 class PlanCache:

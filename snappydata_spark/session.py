@@ -498,7 +498,8 @@ class _CancellableDataFrame(_ClassicDataFrame):
         )
 
 
-_TX_STAGEABLE = {"insert", "put", "update", "delete", "delete_from"}
+_TX_STAGEABLE = {"insert", "put", "update", "delete", "delete_from",
+                 "_apply_changes"}
 # DDL/maintenance inside an explicit transaction is a syntax error in the
 # reference (use_transactions_isolation_levels.md) — reject the same ops
 _TX_FORBIDDEN = {"truncate_table", "alter_table", "compact_table"}
@@ -547,15 +548,17 @@ def _serialized(fn):
             # maintain materialized ANN indexes on the mutated table with
             # the stored model — assignment + encoding only, never a
             # training job (IndexColumnFormatRelation's index-updated-on-
-            # mutation contract).  put/insert narrow the refresh to the
-            # source rows; other mutations re-derive + prune stale keys.
+            # mutation contract).  Keyed writes narrow the refresh to the
+            # rows they added (their last positional argument; a CDC
+            # batch's upserts); other mutations re-derive + prune stale
+            # keys.
             # (Tables with ANN indexes / samples never downgrade —
             # _claims_eligible — so this still runs under the table lock.)
             if fn.__name__ in _ANN_MAINTAINED:
                 if getattr(self, "_ann_indexes", None):
                     src = pred = None
-                    if fn.__name__ in ("put", "insert", "delete_from") and args:
-                        src = args[0]
+                    if fn.__name__ in _KEYED_SOURCE and args:
+                        src = args[-1]
                     elif fn.__name__ in ("update", "delete") and args:
                         pred = args[0]
                     self._ann_maintain(
@@ -577,7 +580,8 @@ _EXCLUSIVE_REQUIRED = {"truncate_table", "alter_table", "compact_table"}
 
 
 _ANN_MAINTAINED = {"put", "insert", "update", "delete", "delete_from",
-                   "truncate_table"}
+                   "_apply_changes", "truncate_table"}
+_KEYED_SOURCE = {"put", "insert", "delete_from", "_apply_changes"}
 
 
 def get_spark(
@@ -1087,6 +1091,8 @@ class SnappySession:
                 df = mutate.delete_df(frame, args[0])
             elif kind == "delete_from":
                 df = mutate.delete_from_df(df, args[0], keys)
+            elif kind == "_apply_changes":
+                df = mutate.replace_on_keys(df, args[0], keys, args[1])
         return df
 
     _KEYCC_CAP = 100_000  # write-set size above which key-level CC
@@ -1105,7 +1111,7 @@ class SnappySession:
         if not keys or tx["keys"].get(name, ...) is None:
             tx["keys"][name] = None  # keyless table → table-level mode
             return
-        if kind in ("put", "insert", "delete_from"):
+        if kind in _KEYED_SOURCE:
             src = args[0].select(*keys)
         else:  # update / delete: rows the predicate matches in the
             # committed base (phantom rows staged by other txs are
@@ -2329,15 +2335,19 @@ class SnappySession:
                 )
 
     def _validate_uniques_incremental(
-        self, meta: TableMeta, batch: DataFrame, exclude_keys: list | None = None
+        self,
+        meta: TableMeta,
+        batch: DataFrame,
+        replaced: tuple[DataFrame, list[str]] | None = None,
     ) -> None:
         """Enforce UNIQUE for an incoming batch (insert/put): the batch
         itself must be NULL-free and duplicate-free on the unique
         columns, and must not collide with EXISTING rows — probed with
         one column-pruned anti/equi join per constraint instead of a
         full-table grouped scan (the batch is small; the table is not).
-        `exclude_keys` (the PUT path) removes existing rows whose key
-        the batch replaces before the collision probe."""
+        `replaced` = (frame, keys) (the keyed-replace path) removes
+        existing rows whose key appears in the frame before the
+        collision probe."""
         uniques = self._meta_uniques(meta)
         if not uniques or self._skip_constraints():
             return
@@ -2363,8 +2373,8 @@ class SnappySession:
             if existing is None:
                 continue
             surviving = existing
-            if exclude_keys:
-                surviving = mutate._anti_on_keys(existing, batch, exclude_keys)
+            if replaced is not None:
+                surviving = mutate._anti_on_keys(existing, *replaced)
             probe = (
                 surviving.select(*cols)
                 .join(batch.select(*cols).distinct(), list(cols), "inner")
@@ -2578,56 +2588,122 @@ class SnappySession:
         try:
             df = self._assign_identities(meta, df)
             self._validate_checks(meta, df)
-            keys = meta.key_columns or meta.partition_by
-            if not keys:
-                # must fail BEFORE the pruned path: keys=[] would make the
-                # semi-join conditionless (every file "affected") and the
-                # anti-join keep nothing — silently replacing the whole table
-                raise ValueError(
-                    f"PUT INTO {name} requires key_columns (or partition_by)"
-                )
+            keys = self._write_keys(meta, "PUT INTO")
             # duplicate keys within one batch conflate to the LAST occurrence
             # (CDC keep-last discipline) BEFORE any path — the pruned path
             # unions the source verbatim, so an unconflated batch would write
             # two rows under one key
             df = mutate.conflate_last(df, keys)
-            self._validate_uniques_incremental(meta, df, exclude_keys=keys)
-            self._validate_fks(meta, df)
-            target = self._mutation_target(name, meta)
-            if target is None:  # empty table: put == insert
-                self.insert(name, df)
-                return
             # parent-side NO ACTION: a PUT replaces whole rows by key, so
             # a child-REFERENCED non-key column (FKs may reference UNIQUE
             # columns) can change and orphan child rows.  Ref columns that
             # are a subset of the PUT key cannot change (same key = same
             # value) — the common references-the-PK case costs nothing.
             key_set = {k.lower() for k in keys}
-            if any(
+            orphan_check = any(
                 not set(fk["ref_columns"]) <= key_set
                 for _, fk in self._referencing_fks(meta.name)
-            ):
-                self._assert_no_fk_orphans(
-                    meta, mutate.put_into_df(target, df, keys)
-                )
-            files = self._bucket_affected_files(meta, df, keys)
-            if files is None:
-                files = self._affected_files(target, source=df, keys=keys)
-            # key tokens guard the empty-radius case: two concurrent PUTs
-            # of the same NEW key touch zero common files but must still
-            # serialize, or both would append and duplicate the key
-            self._scope_gate(meta, files, key_source=(df, keys))
-            if files is None:
-                self._rewrite(mutate.put_into_df(target, df, keys), meta)
-                return
-            touched = self._read_files(target.schema, files)
-            keep = mutate._anti_on_keys(touched, df, keys).select(*target.columns)
-            self._replace_files(
-                meta, files, keep.unionByName(df.select(*target.columns))
+            )
+            self._keyed_replace(name, meta, keys, df, df, orphan_check)
+        finally:
+            self._release_identity_pins()
+        self._maybe_flush_small_files(name, meta)
+
+    @_serialized
+    def _apply_changes(self, name: str, batch: DataFrame, rows: DataFrame) -> None:
+        """A CDC batch as ONE keyed commit — the reference applies a sink
+        batch's deletes and its put-into in one store transaction
+        (SnappySinkCallback.scala:197-206, :325-351).  `batch` holds the
+        last event per key; `rows` are those of its events that are not
+        deletes.  Every key of `batch` leaves the table and `rows` are
+        appended: the end state of deleteFrom(the deletes) followed by
+        putInto(rows), in one blast-radius scan, one rewrite and one
+        manifest generation, so readers see all of the batch or none."""
+        self._check_write_priv(name, "insert")
+        if self._lacks_priv(self._canon(name), "delete") and (
+            batch.count() > rows.count()
+        ):
+            self._check_write_priv(name, "delete")
+        meta = self.catalog.load_meta(name.lower())
+        try:
+            rows = self._assign_identities(meta, rows)
+            self._validate_checks(meta, rows)
+            keys = self._write_keys(meta, "CDC apply into")
+            self._keyed_replace(
+                name, meta, keys, batch, rows,
+                orphan_check=bool(self._referencing_fks(meta.name)),
             )
         finally:
             self._release_identity_pins()
         self._maybe_flush_small_files(name, meta)
+
+    @staticmethod
+    def _write_keys(meta: TableMeta, what: str) -> list[str]:
+        """Key columns of a keyed write.  Must fail BEFORE the pruned
+        path: keys=[] would make the semi-join conditionless (every file
+        "affected") and the anti-join keep nothing — silently replacing
+        the whole table instead of matching nothing."""
+        keys = meta.key_columns or meta.partition_by
+        if not keys:
+            raise ValueError(
+                f"{what} {meta.name} requires key_columns (or partition_by)"
+            )
+        return keys
+
+    def _keyed_replace(
+        self,
+        name: str,
+        meta: TableMeta,
+        keys: list[str],
+        batch: DataFrame,
+        rows: DataFrame | None,
+        orphan_check: bool,
+    ) -> None:
+        """The keyed write PUT INTO, deleteFrom and the CDC sink share:
+        every row whose key appears in `batch` leaves the table and
+        `rows` (None for deleteFrom) are appended, projected onto the
+        table's columns — one blast-radius scan, one claim, one rewrite
+        and one manifest generation.  `rows` must hold one row per key
+        and no key outside `batch`.  A deleteFrom or CDC batch whose
+        radius is empty and that appends no row commits nothing."""
+        if rows is not None:
+            self._validate_uniques_incremental(meta, rows, replaced=(batch, keys))
+            self._validate_fks(meta, rows)
+        target = self._mutation_target(name, meta)
+        if target is None:  # empty table: nothing to replace
+            if rows is not None:
+                m = self._load_manifest(name)
+                if m and m.get("schema"):
+                    rows = rows.select(*StructType.fromJson(m["schema"]).fieldNames())
+                self.insert(name, rows)
+            return
+        if orphan_check:
+            self._assert_no_fk_orphans(
+                meta, mutate.replace_on_keys(target, batch, keys, rows)
+            )
+        files = self._bucket_affected_files(meta, batch, keys)
+        if files is None:
+            files = self._affected_files(target, source=batch, keys=keys)
+        if files == [] and (
+            rows is None or (rows is not batch and rows.isEmpty())
+        ):
+            # nothing matched and nothing to add: zero writes.  A put
+            # appends its whole batch, so only a CDC batch (whose
+            # upserts may be empty) pays for the probe.
+            return
+        # key tokens guard the empty-radius case: two concurrent PUTs
+        # of the same NEW key touch zero common files but must still
+        # serialize, or both would append and duplicate the key
+        self._scope_gate(
+            meta, files, key_source=None if rows is None else (batch, keys)
+        )
+        if files is None:
+            self._rewrite(mutate.replace_on_keys(target, batch, keys, rows), meta)
+            return
+        touched = self._read_files(target.schema, files)
+        self._replace_files(
+            meta, files, mutate.replace_on_keys(touched, batch, keys, rows)
+        )
 
     @_serialized
     def update(self, name: str, where, assignments: dict, alias: str | None = None) -> None:
@@ -2746,31 +2822,10 @@ class SnappySession:
         """df.write.deleteFrom(t) (SnappyImplicits.scala:209-222)."""
         self._check_write_priv(name, "delete")
         meta = self.catalog.load_meta(name.lower())
-        keys = meta.key_columns or meta.partition_by
-        if not keys:
-            raise ValueError(
-                f"deleteFrom {name} requires key_columns (or partition_by) "
-                "— keys=[] would wipe every row, not match none"
-            )
-        target = self._mutation_target(name, meta)
-        if target is None:
-            return
-        if self._referencing_fks(meta.name):
-            self._assert_no_fk_orphans(
-                meta, mutate.delete_from_df(target, df, keys)
-            )
-        files = self._bucket_affected_files(meta, df, keys)
-        if files is None:
-            files = self._affected_files(target, source=df, keys=keys)
-        if files is not None and not files:
-            return
-        self._scope_gate(meta, files)
-        if files is None:
-            self._rewrite(mutate.delete_from_df(target, df, keys), meta)
-            return
-        touched = self._read_files(target.schema, files)
-        self._replace_files(
-            meta, files, mutate._anti_on_keys(touched, df, keys).select(*target.columns)
+        keys = self._write_keys(meta, "deleteFrom")
+        self._keyed_replace(
+            name, meta, keys, df, None,
+            orphan_check=bool(self._referencing_fks(meta.name)),
         )
 
     # ------------------------------------------------------------------ SQL

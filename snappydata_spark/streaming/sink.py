@@ -15,8 +15,12 @@ SnappyStoreSinkProviderSuite.scala:72-286):
   the convergent upsert path).
 - with an `_eventType` column (ints INSERT=0/UPDATE=1/DELETE=2, :119):
   per key keep only the LAST event in the batch (event conflation,
-  :286-309; insert followed by update ⇒ upsert), then apply deletes via
-  deleteFrom, upserts via putInto, inserts via insertInto (:325-351).
+  :286-309; insert followed by update ⇒ upsert), then apply the whole
+  batch as ONE keyed commit: every key of the batch leaves the table and
+  the non-DELETE events are appended, in one blast-radius scan, one
+  rewrite and one manifest generation.  Readers see all of the batch or
+  none of it, and its end state equals the reference's delete-then-put
+  (:325-351, one store transaction).
 - without `_eventType`: putInto if the table has key columns else
   insertInto (:245-273).
 
@@ -141,23 +145,11 @@ class SnappySink:
                 f"CDC stream into {self.table} requires key_columns metadata"
             )
         last = conflate_events(batch, keys, order_col=self.order_col)
-        drop_cols = [EVENT_TYPE_COL]
-        if self.order_col is not None:
-            # a transport-level order column (Kafka offset) is dropped
-            # before apply; an order column that IS a table column
-            # (event timestamp) flows through
-            table_cols = {c.lower() for c in self.session.table(self.table).columns}
-            if self.order_col.lower() not in table_cols:
-                drop_cols.append(self.order_col)
-        deletes = last.filter(F.col(EVENT_TYPE_COL) == EVENT_DELETE).drop(
-            *drop_cols
-        )
-        upserts = last.filter(F.col(EVENT_TYPE_COL) != EVENT_DELETE).drop(
-            *drop_cols
-        )
-        # reference applies deletes first, then put-into for insert+update
-        # (:325-351 — an insert followed by update conflates to upsert)
-        if deletes.limit(1).count() > 0:
-            self.session.delete_from(self.table, deletes)
-        if upserts.limit(1).count() > 0:
-            self.session.put(self.table, upserts)
+        # one keyed commit (:325-351 — an insert followed by update
+        # conflates to upsert): the batch's keys leave the table and its
+        # non-DELETE events are appended, projected onto the table's
+        # columns (so `_eventType` and a transport-level order column
+        # are dropped; an order column that IS a table column flows
+        # through) — the end state of delete-then-put, in one generation
+        upserts = last.filter(F.col(EVENT_TYPE_COL) != EVENT_DELETE)
+        self.session._apply_changes(self.table, last, upserts)

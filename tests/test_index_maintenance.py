@@ -269,7 +269,12 @@ def test_stream_sink_maintains_indexes(spark, snappy):
     the reference maintains its index relations through the same
     mutation layer the sink uses (SnappySinkCallback → putInto)."""
     from snappydata_spark import index_inverted, index_minhash
-    from snappydata_spark.streaming import SnappySink
+    from snappydata_spark.streaming import (
+        EVENT_DELETE,
+        EVENT_INSERT,
+        EVENT_UPDATE,
+        SnappySink,
+    )
 
     sn = snappy
     docs = spark.createDataFrame(
@@ -288,7 +293,21 @@ def test_stream_sink_maintains_indexes(spark, snappy):
         0,
     )
     sink(spark.createDataFrame([(5, "another pass")], "doc_id long, text string"), 1)
+    # a CDC batch: one keyed commit deleting a seeded doc, updating one
+    # and inserting one (single partition: this sink has no order_col)
+    sink(
+        spark.createDataFrame(
+            [
+                (3, None, EVENT_DELETE),
+                (4, "rewritten by a change event", EVENT_UPDATE),
+                (10, "inserted by a change event", EVENT_INSERT),
+            ],
+            "doc_id long, text string, _eventType int",
+        ).coalesce(1),
+        2,
+    )
     base = sn.table("sk_docs")
+    assert sorted(r.doc_id for r in base.collect()) == [0, 1, 2, 4, 5, 6, 7, 9, 10]
     assert sorted(map(tuple, sn.table("sk_inv__ann").collect())) == sorted(
         map(tuple, index_inverted._postings(base, "text", "doc_id").collect())
     )

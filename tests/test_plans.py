@@ -281,6 +281,24 @@ def test_plan_cache_double_quoted_literal_protected(snappy):
     assert [r.c for r in rows] == ["100"]
 
 
+def test_plan_cache_typed_literal_protected(snappy):
+    """The string of a typed literal (DATE '...') stays in the template:
+    tokenized, `DATE :p0` fails to resolve and the template would fall
+    back to raw text for good, so later statements of the same shape
+    would never re-bind their other literals."""
+    snappy.spark.createDataFrame(
+        [(1, "2024-01-01"), (2, "2024-01-02"), (3, "2024-01-03")],
+        "n int, d string",
+    ).selectExpr("n", "CAST(d AS DATE) AS d").createOrReplaceTempView("typed_t")
+    for n, want in ((1, [2, 3]), (2, [3])):
+        rows = snappy.sql(
+            f"SELECT n FROM typed_t WHERE d >= DATE '2024-01-02' AND n > {n} "
+            "ORDER BY n"
+        ).collect()
+        assert [r.n for r in rows] == want
+    assert snappy.plan_cache._raw_templates == set()
+
+
 def test_plan_cache_escape_sequences_bind_exactly(snappy):
     """Backslash escapes in a parameterized literal must bind the same
     string the raw SQL produces (tab, newline, backslash, unicode)."""

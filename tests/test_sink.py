@@ -52,6 +52,69 @@ def test_cdc_insert_update_delete(sink_env):
     assert got == {(1, "ONE"), (3, "three")}
 
 
+def test_cdc_batch_is_one_generation(sink_env):
+    """A batch is one keyed commit (the reference applies it in one store
+    transaction): inserts, updates and deletes together add exactly one
+    manifest generation, and a batch that only deletes absent keys adds
+    none."""
+    sn, sink = sink_env
+    gens = len(sn.table_history("cdc_t"))
+    sink(
+        _batch(
+            sn.spark,
+            [
+                (3, "three", 3.0, EVENT_INSERT),
+                (1, "ONE", 1.5, EVENT_UPDATE),
+                (2, None, 0.0, EVENT_DELETE),
+            ],
+        ),
+        batch_id=0,
+    )
+    assert len(sn.table_history("cdc_t")) == gens + 1
+    sink(
+        _batch(
+            sn.spark,
+            [(40, None, 0.0, EVENT_DELETE), (41, None, 0.0, EVENT_DELETE)],
+        ),
+        batch_id=1,
+    )
+    assert len(sn.table_history("cdc_t")) == gens + 1
+    got = {(r.k, r.v) for r in sn.table("cdc_t").collect()}
+    assert got == {(1, "ONE"), (3, "three")}
+
+
+def test_cdc_into_empty_table_keeps_table_columns(sink_env):
+    """Into an emptied table the batch's upserts are inserted projected
+    onto the table's columns: `_eventType` and the transport order
+    column never become table columns."""
+    sn, sink = sink_env
+    sn.truncate_table("cdc_t")
+    sink(
+        _batch(
+            sn.spark,
+            [(1, None, 0.0, EVENT_DELETE), (4, "four", 4.0, EVENT_INSERT)],
+        ),
+        batch_id=0,
+    )
+    got = sn.table("cdc_t")
+    assert got.columns == ["k", "v", "x"]
+    assert [tuple(r) for r in got.collect()] == [(4, "four", 4.0)]
+
+
+def test_cdc_delete_needs_delete_privilege(sink_env):
+    """A batch needs DELETE on the table only when it holds a delete."""
+    sn, sink = sink_env
+    sn.sql("GRANT INSERT ON cdc_t TO alice")
+    sn.current_user = "alice"
+    try:
+        sink(_batch(sn.spark, [(5, "five", 5.0, EVENT_INSERT)]), batch_id=0)
+        with pytest.raises(PermissionError):
+            sink(_batch(sn.spark, [(1, None, 0.0, EVENT_DELETE)]), batch_id=1)
+    finally:
+        sn.current_user = ""
+    assert {r.k for r in sn.table("cdc_t").collect()} == {1, 2, 5}
+
+
 def test_cdc_conflation_keeps_last_event(sink_env):
     sn, sink = sink_env
     # same key: insert then two updates within one batch → single upsert

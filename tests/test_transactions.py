@@ -56,6 +56,48 @@ def test_commit_applies_buffered_ops(row_table, spark):
     assert _state(other) == {1: 99, 2: 21, 4: 40}
 
 
+def test_cdc_sink_batch_stages_as_one_op(row_table, spark):
+    """A CDC sink batch inside a transaction stages as ONE op whose
+    overlay is the batch's delete-then-put end state; COMMIT applies it,
+    ROLLBACK discards it."""
+    from snappydata_spark import SnappySession
+    from snappydata_spark.streaming import (
+        EVENT_DELETE,
+        EVENT_INSERT,
+        EVENT_UPDATE,
+        SnappySink,
+    )
+
+    sn = row_table
+    other = SnappySession(spark, store_dir=sn.catalog.base_dir)
+    sink = SnappySink(sn, "tx_t", query_name="tx_cdc", order_col="seq")
+
+    def batch(rows):
+        return spark.createDataFrame(
+            [r + (i,) for i, r in enumerate(rows)],
+            "k int, v int, _eventType int, seq long",
+        )
+
+    sn.sql("BEGIN")
+    sink(
+        batch([(1, 11, EVENT_UPDATE), (3, None, EVENT_DELETE), (4, 40, EVENT_INSERT)]),
+        0,
+    )
+    assert len(sn._tx["ops"]["tx_t"]) == 1
+    assert _state(sn) == {1: 11, 2: 20, 4: 40}
+    assert _state(other) == {1: 10, 2: 20, 3: 30}
+    sn.sql("COMMIT")
+    assert _state(sn) == {1: 11, 2: 20, 4: 40}
+    assert _state(other) == {1: 11, 2: 20, 4: 40}
+
+    sn.sql("BEGIN")
+    sink(batch([(2, None, EVENT_DELETE), (5, 50, EVENT_INSERT)]), 1)
+    assert _state(sn) == {1: 11, 4: 40, 5: 50}
+    sn.sql("ROLLBACK")
+    assert _state(sn) == {1: 11, 2: 20, 4: 40}
+    assert _state(other) == {1: 11, 2: 20, 4: 40}
+
+
 def test_rollback_discards(row_table):
     sn = row_table
     sn.begin_transaction()
